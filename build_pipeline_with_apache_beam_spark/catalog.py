@@ -18,7 +18,9 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# spark.sql.files.maxPartitionBytes: the session sets it, table_meta's split
+# estimate divides by it
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
 
 def coerce_events_ts(df: DataFrame) -> DataFrame:
@@ -64,22 +66,21 @@ def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
+    # recursive: a partitioned layout keeps its files under k=v/ dirs
     files = [path] if os.path.isfile(path) else [
-        os.path.join(path, f) for f in sorted(os.listdir(path))
-        if f.endswith(".parquet")]
+        os.path.join(d, f) for d, _, fs in os.walk(path)
+        for f in fs if f.endswith(".parquet")]
     n_rows = 0
     total_bytes = 0
     for f in files:
         n_rows += pq.ParquetFile(f).metadata.num_rows
         total_bytes += os.path.getsize(f)
-    max_pb = 128 * 1024 * 1024  # keep in sync with session maxPartitionBytes
-    n_splits = max(len(files), -(-total_bytes // max_pb))
+    n_splits = max(len(files), -(-total_bytes // MAX_PARTITION_BYTES))
     return n_rows, int(n_splits)
 
 
-def sized_spread(df: DataFrame, n_rows: int,
-                 rows_per_partition: int,
-                 n_splits: int | None = None) -> DataFrame:
+def sized_spread(df: DataFrame, n_rows: int, rows_per_partition: int,
+                 n_splits: int) -> DataFrame:
     """Spread a small scan for a CPU-heavy downstream stage — ONLY when the
     scan has fewer partitions than the row-sized target (optimization guide
     §2.2/§6; round-14 verdict #1).
@@ -96,8 +97,6 @@ def sized_spread(df: DataFrame, n_rows: int,
     spark = df.sparkSession
     target = max(1, min(spark.sparkContext.defaultParallelism,
                         -(-n_rows // max(1, rows_per_partition))))
-    if n_splits is None:
-        n_splits = df.rdd.getNumPartitions()
     if n_splits >= target:
         return df
     return df.repartition(target)

@@ -31,6 +31,7 @@ import hashlib
 import os
 import shutil
 
+from build_pipeline_with_apache_beam_spark import sqltext
 from build_pipeline_with_apache_beam_spark.catalog import (
     load_table,
     sized_spread,
@@ -453,9 +454,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
           .alias(f"s_{b}") for b in range(64)]
     ), sf_dir, f"simhash_bits_{hash_family}")
     sim_sql = " + ".join(
-        f"(CASE WHEN s_{b} * 2 > n_toks THEN CAST(1 AS BIGINT)"
-        f" ELSE CAST(0 AS BIGINT) END"
-        f" * CAST({1 << b if b < 63 else -(1 << 63)} AS BIGINT))"
+        f"(CASE WHEN s_{b} * 2 > n_toks THEN {sqltext.bigint(1)}"
+        f" ELSE {sqltext.bigint(0)} END"
+        f" * {sqltext.bigint(1 << b if b < 63 else -(1 << 63))})"
         for b in range(64))
     simhash = bit_sums.select("doc_id", F.expr(sim_sql).alias("simhash"))
     # 4 × 16-bit bands; hamming ≤ 3 ⟹ at least one band identical

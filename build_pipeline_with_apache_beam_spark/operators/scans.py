@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from build_pipeline_with_apache_beam_spark import sqltext
 from build_pipeline_with_apache_beam_spark.catalog import load_table
 
 # The engine-side analog of the reference's fixed extraction day
@@ -365,11 +366,9 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").alias("max_event_id"))
     observed.write.format("noop").mode("overwrite").save()   # the real pass
     m = obs.get
-    return spark.sql(
-        "SELECT CAST({n} AS BIGINT) AS n_rows, "
-        "CAST({t} AS DOUBLE) AS total_value, "
-        "CAST({mx} AS BIGINT) AS max_event_id".format(
-            n=m["n_rows"], t=m["total_value"], mx=m["max_event_id"]))
+    return spark.sql(sqltext.values(
+        [(m["n_rows"], m["total_value"], m["max_event_id"])],
+        "n_rows BIGINT, total_value DOUBLE, max_event_id BIGINT"))
 
 
 def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark import sqltext
+from build_pipeline_with_apache_beam_spark.catalog import (
+    load_table,
+    sized_spread,
+    table_meta,
+)
 
 DIM = 64
 N_PLANES = 4  # 2^4 buckets — sized so buckets hold enough candidates at test SFs
@@ -44,18 +49,6 @@ def _dot(a, b):
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def _cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _with_double_vec(df: DataFrame, col: str = "embedding") -> DataFrame:
-    return df.withColumn("vec", F.col(col).cast("array<double>"))
-
-
 # ~128 vectors per task for the HOF dot-product hot loops: array lambdas
 # evaluate per element (no whole-stage codegen inside the lambda), so even
 # a broadcast-query LINEAR scan costs ~0.35 ms/row at dim 64 × 5 queries —
@@ -65,33 +58,24 @@ def _with_double_vec(df: DataFrame, col: str = "embedding") -> DataFrame:
 _VEC_ROWS_PER_PARTITION = 128
 
 
-def _with_unit_vec(df: DataFrame, col: str = "embedding",
-                   sf_dir: str | None = None) -> DataFrame:
-    """Pre-normalize to unit length ONCE per vector, so every pairwise
-    cosine downstream is a single dot product instead of dot + two norms —
-    3× less expression work inside the join, and at scale the normalized
-    column is what you'd persist in the index.
+def _with_unit_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``embeddings`` table with ``vec``: each vector pre-normalized to
+    unit length ONCE, so every pairwise cosine downstream is a single dot
+    product instead of dot + two norms — 3× less expression work inside
+    the join, and at scale the normalized column is what you'd persist in
+    the index.
 
-    Size-aware spread (r15; r14 verdict #6): the pre-r15 form exchanged
-    the full vector table at EVERY scale via an unconditional
-    ``repartition(defaultParallelism)``.  Now the exchange exists only
-    when the scan has fewer splits than the row-sized target — the test
-    corpora are one split, so they still fan out for the per-pair HOF hot
-    loops (measured 0.77 → 0.24 s on sim_cosine_pairs at sf0.1), while a
-    corpus-scale scan rides its own splits with NO exchange.  Callers pass
-    sf_dir so row/split counts come off the parquet footers (no Spark
-    job); without it the decision falls back to a count() + plan walk."""
-    from build_pipeline_with_apache_beam_spark.catalog import (
-        sized_spread,
-        table_meta,
-    )
-
-    if sf_dir is not None:
-        n_rows, n_splits = table_meta(sf_dir, "embeddings")
-    else:
-        n_rows, n_splits = df.count(), None
-    df = sized_spread(df, n_rows, _VEC_ROWS_PER_PARTITION, n_splits)
-    v = F.col(col).cast("array<double>")
+    Size-aware spread (r15; r14 verdict #6): the exchange exists only when
+    the scan has fewer splits than the row-sized target — the test corpora
+    are one split, so they still fan out for the per-pair HOF hot loops
+    (measured 0.77 → 0.24 s on sim_cosine_pairs at sf0.1), while a
+    corpus-scale scan rides its own splits with NO exchange.  Row and split
+    counts come off the footers of the same table this loads (no Spark
+    job)."""
+    n_rows, n_splits = table_meta(sf_dir, "embeddings")
+    df = sized_spread(load_table(spark, sf_dir, "embeddings"), n_rows,
+                      _VEC_ROWS_PER_PARTITION, n_splits)
+    v = F.col("embedding").cast("array<double>")
     n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     return df.withColumn("vec", F.transform(v, lambda x: x / n))
 
@@ -99,7 +83,7 @@ def _with_unit_vec(df: DataFrame, col: str = "embedding",
 def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine for (query × candidate): the verifiable kernel.
     Queries broadcast against one candidate scan."""
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = _with_unit_vec(spark, sf_dir)
     q = (emb.where(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")))
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("vec").alias("cvec"))
@@ -142,22 +126,11 @@ def _bucket(vec_col: str) -> F.Column:
     and the DuckDB oracle (which buckets the raw vector) — round-8 ADVICE.
     Bucketing the raw vector makes both sides evaluate the SAME expression:
     identical products, identical left-to-right double accumulation."""
-    planes = _hyperplanes()
-    # ONE F.expr per bucket expression (r15, guide §4 driver cost — the
-    # logreg/PCA/bloom fix): 4×64 F.lit() plane-literal Columns cost
-    # ~0.5 s of py4j round-trips per call; the SQL string is one call.
-    # CAST(repr AS DOUBLE) round-trips each double exactly, and the fold
-    # (zip_with → aggregate, CAST(0.0 AS DOUBLE) seed, left-to-right
-    # acc + v) is the same expression _dot builds — identical doubles,
-    # oracle-reverified.
-    terms = []
-    for i, p in enumerate(planes):
-        arr = "array({})".format(
-            ", ".join(f"CAST({v!r} AS DOUBLE)" for v in p))
-        terms.append(
-            f"(CASE WHEN aggregate(zip_with({vec_col}, {arr},"
-            " (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-            f" (acc, v) -> acc + v) >= 0 THEN {1 << i} ELSE 0 END)")
+    # ONE F.expr: 4×64 F.lit() plane-literal Columns cost ~0.5 s of py4j
+    # round-trips per call (r15)
+    terms = [f"(CASE WHEN {sqltext.dot(vec_col, sqltext.doubles(p))} >= 0"
+             f" THEN {1 << i} ELSE 0 END)"
+             for i, p in enumerate(_hyperplanes())]
     return F.expr("CAST((" + " + ".join(terms) + ") AS INT)")
 
 
@@ -192,7 +165,7 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = _with_unit_vec(spark, sf_dir)
     bucketed = emb.withColumn(
         "bucket", _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
     q = (bucketed.where(F.col("vec_id") < N_QUERIES)
@@ -222,17 +195,11 @@ def _argmax_cell(dots: F.Column) -> F.Column:
 
 
 def _cell_dots(vec_col: str, centroids: list[list[float]]) -> F.Column:
-    """Array of dot(vec, centroid_c) per cell — one F.expr (r15, guide §4
-    driver cost): the k×d F.lit() literal Columns cost ~1 s of py4j
-    round-trips per call.  Same fold (zip_with → aggregate, double seed,
-    left-to-right acc + v) as _dot, in centroid order — identical doubles
-    (oracle-reverified).  ``vec_col`` is the vector column's SQL text."""
-    cent = "array({})".format(", ".join(
-        "array({})".format(", ".join(f"CAST({v!r} AS DOUBLE)" for v in c))
-        for c in centroids))
-    return F.expr(
-        f"transform({cent}, cv -> aggregate(zip_with({vec_col}, cv,"
-        " (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
+    """Array of dot(vec, centroid_c) per cell, in centroid order, as one
+    F.expr (k×d F.lit() Columns cost ~1 s of py4j round-trips per call).
+    ``vec_col`` is the vector column's SQL text."""
+    return F.expr(f"transform({sqltext.double_matrix(centroids)},"
+                  f" cv -> {sqltext.dot(vec_col, 'cv')})")
 
 
 _TRAIN_SAMPLE = 4096  # codebook training sample size (driver-side, bounded)
@@ -321,7 +288,7 @@ def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalization expression from being re-inlined into every one of the
     # 8 per-cell dot products (at scale the assigned index is written to
     # disk partitioned by cell — probing becomes partition pruning)
-    emb = (_with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = (_with_unit_vec(spark, sf_dir)
            .select("vec_id", "vec").persist())
     cents = _ivf_codebook(emb)
     assigned = emb.withColumn(
@@ -387,7 +354,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = _with_unit_vec(spark, sf_dir)
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
                             _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
@@ -524,7 +491,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in plain Python."""
     import pandas as pd
 
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = _with_unit_vec(spark, sf_dir)
     q = (emb.where(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("vec").alias("qvec")))
@@ -631,7 +598,7 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the τ-threshold removal join, and the per-cell audit value-for-value.
     Tests additionally assert the keep-rule invariants.
     """
-    emb = (_with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
+    emb = (_with_unit_vec(spark, sf_dir)
            .select("vec_id", "vec").persist())
     cents = _ivf_codebook(emb)
     assigned = (emb

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark import sqltext
+
 _WINDOW_LO = "2024-01-08 00:00:00"
 _WINDOW_HI = "2024-01-14 23:59:59.999999"
 
@@ -492,14 +494,10 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
     max_valid_ts = max((r["window_end"] for r in hist), default=None)
     advanced = (max_valid_ts is not None
                 and wm_final.isoformat() == max_valid_ts)
-    # SQL VALUES, never createDataFrame literals (Python-RDD build sides
-    # stall broadcasts — see the verify notes)
-    return spark.sql(
-        f"SELECT CAST({int(n_scanned)} AS BIGINT) AS n_scanned, "
-        f"CAST({int(n_valid)} AS BIGINT) AS n_valid, "
-        f"CAST({int(n_unique)} AS BIGINT) AS n_unique, "
-        f"CAST({int(n_sunk)} AS BIGINT) AS n_sunk, "
-        f"{'TRUE' if advanced else 'FALSE'} AS watermark_advanced")
+    return spark.sql(sqltext.values(
+        [(n_scanned, n_valid, n_unique, n_sunk, advanced)],
+        "n_scanned BIGINT, n_valid BIGINT, n_unique BIGINT, n_sunk BIGINT, "
+        "watermark_advanced BOOLEAN"))
 
 
 QUERIES = {

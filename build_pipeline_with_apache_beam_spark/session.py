@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from build_pipeline_with_apache_beam_spark.catalog import MAX_PARTITION_BYTES
+
 # Shuffle partitions: on local[N] match core count (each partition is a task;
 # 200 tiny tasks on 32 cores is pure overhead).  On a 1000-executor cluster
 # this would be sized ~2-3x total cores instead; AQE coalesces down from it.
@@ -67,7 +69,7 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
         # type, so scan them as long and let the catalog convert to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -51,6 +51,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from build_pipeline_with_apache_beam_spark import sqltext
 from build_pipeline_with_apache_beam_spark.catalog import load_table
 from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
 
@@ -423,8 +424,8 @@ def count_documents(spark: SparkSession, root: str, lo_micros: int,
     # boundary files: bounded driver-side metadata (a tiny path list via
     # SQL VALUES — never a Python-RDD build side), counted on executors
     # with the same Arrow kernel the reader uses
-    vals = ", ".join("('" + p.replace("'", "''") + "')" for p in boundary)
-    paths_df = spark.sql(f"SELECT col1 AS path FROM (VALUES {vals})")
+    paths_df = spark.sql(sqltext.values([(p,) for p in boundary],
+                                        "path STRING"))
 
     def _count(batches):
         import pandas as pd
@@ -470,13 +471,10 @@ def scan_docstore_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats: dict = {}
     n = count_documents(spark, root, _micros(_CNT_LO), _micros(_CNT_HI),
                         stats=stats)
-    return spark.sql(f"""
-        SELECT CAST({n} AS BIGINT) AS n_docs,
-               CAST({stats['n_manifest_only']} AS BIGINT)
-                   AS n_files_manifest_only,
-               CAST({stats['n_opened']} AS BIGINT) AS n_files_opened,
-               CAST({stats['n_pruned']} AS BIGINT) AS n_files_pruned
-    """)
+    return spark.sql(sqltext.values(
+        [(n, stats["n_manifest_only"], stats["n_opened"], stats["n_pruned"])],
+        "n_docs BIGINT, n_files_manifest_only BIGINT, n_files_opened BIGINT, "
+        "n_files_pruned BIGINT"))
 
 
 def stream_docstore_tail(spark: SparkSession, sf_dir: str,

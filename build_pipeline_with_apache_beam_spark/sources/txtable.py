@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark import sqltext
+
 
 class CommitConflict(Exception):
     """Another writer committed this version first."""
@@ -320,17 +322,13 @@ def merge_acid_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_before = table.read(v_before).count()
     v_after = table.compact(target_file_bytes=1 << 20)
     files_after = table.data_file_count(v_after)
-    return spark.sql(
-        f"""SELECT CAST({v_before} AS INT) AS version_before,
-                   CAST({v_after} AS INT) AS version_after,
-                   CAST({files_before} AS BIGINT) AS n_files_before,
-                   CAST({files_after} AS BIGINT) < CAST({files_before} AS BIGINT)
-                       AS files_reduced,
-                   CAST({rows_before} AS BIGINT) AS n_rows_before,
-                   CAST({table.read(v_after).count()} AS BIGINT)
-                       AS n_rows_after,
-                   CAST({table.read(v_before).count()} AS BIGINT)
-                       AS n_rows_v1_after_compact""")
+    return spark.sql(sqltext.values(
+        [(v_before, v_after, files_before, files_after < files_before,
+          rows_before, table.read(v_after).count(),
+          table.read(v_before).count())],
+        "version_before INT, version_after INT, n_files_before BIGINT, "
+        "files_reduced BOOLEAN, n_rows_before BIGINT, n_rows_after BIGINT, "
+        "n_rows_v1_after_compact BIGINT"))
 
 
 QUERIES = {

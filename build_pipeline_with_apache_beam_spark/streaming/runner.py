@@ -25,6 +25,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from build_pipeline_with_apache_beam_spark import sqltext
 from build_pipeline_with_apache_beam_spark.streaming.watermark import WatermarkStore
 
 
@@ -114,18 +115,16 @@ def q_incremental_runlog(spark, sf_dir: str) -> DataFrame:
         window=timedelta(hours=_RUN_WINDOW_H))
     runner.run_once(now=_RUN_EPOCH + timedelta(hours=_RUN_SPAN_H))
 
-    recs = store.history()
-    rows = ",\n".join(
-        "('{ws}', '{we}', {n})".format(
-            ws=r["window_start"], we=r["window_end"], n=r["record_count"])
-        for r in recs)
     # VALUES literal (driver metadata, a handful of rows) → DataFrame
+    runlog = sqltext.values(
+        [(r["window_start"], r["window_end"], r["record_count"])
+         for r in store.history()],
+        "window_start STRING, window_end STRING, record_count BIGINT")
     return spark.sql(f"""
         SELECT CAST(window_start AS TIMESTAMP) AS window_start,
                CAST(window_end AS TIMESTAMP) AS window_end,
-               CAST(record_count AS BIGINT) AS record_count
-        FROM (VALUES {rows}) AS t(window_start, window_end, record_count)
-        ORDER BY window_start
+               record_count
+        FROM ({runlog}) ORDER BY window_start
     """)
 
 

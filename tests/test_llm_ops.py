@@ -359,7 +359,6 @@ def test_embedding_dedup_hot_bucket_split_bounds_blocks(spark, sf_dir):
     hold <= 2*MAX_BLOCK vectors (hash splitting is approximately even), and
     at test sf — where all buckets are under the cap — the sub-split must
     be a no-op (every row in sub_block 0)."""
-    from build_pipeline_with_apache_beam_spark.catalog import load_table
     from build_pipeline_with_apache_beam_spark.operators.similarity import (
         MAX_BLOCK,
         _bucket,
@@ -367,10 +366,10 @@ def test_embedding_dedup_hot_bucket_split_bounds_blocks(spark, sf_dir):
         _with_unit_vec,
     )
 
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
+    emb = _with_unit_vec(spark, sf_dir)
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
-                            _bucket(F.col("embedding").cast("array<double>")))
+                            _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
                 .drop("embedding"))
     sizes = bucketed.groupBy("bucket").agg(
         F.ceil(F.count(F.lit(1)) / MAX_BLOCK).alias("n_sub"))
@@ -529,7 +528,7 @@ def test_lsh_bucket_sql_matches_engine(spark, sf_dir, duck):
     emb = load_table(spark, sf_dir, "embeddings")
     got = {r["vec_id"]: r["b"] for r in emb.select(
         "vec_id",
-        _bucket(F.col("embedding").cast("array<double>")).alias("b"))
+        _bucket("CAST(embedding AS ARRAY<DOUBLE>)").alias("b"))
         .collect()}
     want = dict(duck.execute(
         f"SELECT vec_id, {_bucket_sql('embedding::DOUBLE[]')} "
@@ -542,7 +541,6 @@ def test_sub_block_split_engages_and_spreads_under_forced_cap(spark, sf_dir):
     dormant in the other tests; force it with a tiny cap and assert the
     portable multiplicative hash actually ENGAGES (multiple sub-blocks),
     keeps ids in range, and spreads evenly enough to bound block size."""
-    from build_pipeline_with_apache_beam_spark.catalog import load_table
     from build_pipeline_with_apache_beam_spark.operators.similarity import (
         _bucket,
         _sub_block,
@@ -550,10 +548,10 @@ def test_sub_block_split_engages_and_spreads_under_forced_cap(spark, sf_dir):
     )
 
     cap = 16  # force n_sub > 1 in every occupied bucket
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
+    emb = _with_unit_vec(spark, sf_dir)
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
-                            _bucket(F.col("embedding").cast("array<double>")))
+                            _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
                 .drop("embedding"))
     sizes = bucketed.groupBy("bucket").agg(
         F.ceil(F.count(F.lit(1)) / cap).alias("n_sub"))

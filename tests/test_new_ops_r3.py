@@ -169,7 +169,6 @@ def test_semdedup_matches_numpy_replica(spark, sf_dir):
     must agree cell-by-cell — and the keep-rule laws must hold."""
     import numpy as np
 
-    from build_pipeline_with_apache_beam_spark.catalog import load_table
     from build_pipeline_with_apache_beam_spark.operators.similarity import (
         SEMDEDUP_TAU,
         _ivf_codebook,
@@ -178,8 +177,7 @@ def test_semdedup_matches_numpy_replica(spark, sf_dir):
     )
 
     out = {r["cell"]: r for r in corpus_semdedup(spark, sf_dir).collect()}
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings")) \
-        .select("vec_id", "vec")
+    emb = _with_unit_vec(spark, sf_dir).select("vec_id", "vec")
     pdf = emb.toPandas().sort_values("vec_id")
     vecs = np.stack(pdf["vec"].values)
     ids = pdf["vec_id"].to_numpy()
