@@ -21,6 +21,45 @@ TABLES = (
 # spark.sql.files.maxPartitionBytes: the session sets it, table_meta's split
 # estimate divides by it
 MAX_PARTITION_BYTES = 128 * 1024 * 1024
+# spark.sql.files.openCostInBytes default: what opening one file is worth in
+# bytes when files are packed into partitions
+OPEN_COST_BYTES = 4 * 1024 * 1024
+
+
+def pack_files(paths: list[str]) -> list[list[str]]:
+    """Group files into read partitions the way Spark packs a file scan
+    (``FilePartition.maxSplitBytes`` / ``getFilePartitions``):
+
+    - every file costs its size plus ``OPEN_COST_BYTES``;
+    - split size = min(MAX_PARTITION_BYTES, max(open cost, total cost /
+      parallelism));
+    - files go largest first into the current partition, which closes when
+      the next file would push it past the split size (next-fit).
+
+    parallelism is the engine's core count (``session.local_cpus``).  A
+    partition is one task, and a Python-worker task costs a fixed dispatch
+    whatever it reads, so a scan of many small files gets about one task
+    per core instead of one per file."""
+    # imported here: session imports this module
+    from build_pipeline_with_apache_beam_spark.session import local_cpus
+
+    sized = sorted(((os.path.getsize(p), p) for p in paths),
+                   key=lambda t: -t[0])
+    total = sum(size + OPEN_COST_BYTES for size, _ in sized)
+    max_split = min(MAX_PARTITION_BYTES,
+                    max(OPEN_COST_BYTES, total // local_cpus()))
+    parts: list[list[str]] = []
+    current: list[str] = []
+    current_bytes = 0
+    for size, path in sized:
+        if current and current_bytes + size > max_split:
+            parts.append(current)
+            current, current_bytes = [], 0
+        current.append(path)
+        current_bytes += size + OPEN_COST_BYTES
+    if current:
+        parts.append(current)
+    return parts
 
 
 def coerce_events_ts(df: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ import os
 import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -219,8 +219,10 @@ def resolve_trigger_files(trigger_files: int | None, total_files: int,
     """Files-per-trigger for a docstore tail drain (round-12 verdict #5):
     explicit arg > ``SPARK_GRAFT_TRIGGER_FILES`` env > ~total/default
     batches.  Returns a cap ≥ 1.  The latency/throughput trade-off is
-    measured in BASELINE.md (per-trigger machinery ≈1.5 s at any batch
-    size — small caps bound latency, large caps amortize machinery)."""
+    measured in BASELINE.md: each trigger pays a fixed machinery cost
+    (``streaming.trigger_p50_s`` = 1.6 s for ~3.3k-row triggers of
+    ``pipeline_reference_etl_stream`` at sf0.01 on 4 cores), so small caps
+    bound latency and large caps amortize the machinery."""
     if trigger_files is None:
         env = os.environ.get("SPARK_GRAFT_TRIGGER_FILES", "")
         trigger_files = int(env) if env.isdigit() and int(env) > 0 else None
@@ -329,13 +331,16 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
                            F.concat(F.lit("x"), rec)).otherwise(rec)
         parsed = F.from_json(
             corrupted, "event_id BIGINT, user_id BIGINT, value DOUBLE")
+        # the one-row funnel metrics ride the lake write as observed
+        # metrics: a separate aggregate job would read the batch from the
+        # source a second time
+        obs = Observation()
         ann = win.withColumn(
-            "is_valid", parsed.getField("event_id").isNotNull())
-        counts = ann.agg(
+            "is_valid", parsed.getField("event_id").isNotNull()).observe(
+            obs,
             F.count(F.lit(1)).alias("ns"),
             F.count_if(F.col("is_valid")).alias("nv"),
-            F.max(F.when(F.col("is_valid"), F.col("ts"))).alias("wm"),
-        ).collect()[0]  # driver-bounded: ONE-row funnel metrics per batch
+            F.max(F.when(F.col("is_valid"), F.col("ts"))).alias("wm"))
         # stage 3: keep-latest within the batch, then MERGE with the lake
         w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
         batch_latest = (ann.where("is_valid")
@@ -375,6 +380,8 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
         # rows commit NOTHING — the watermark is the max processed EVENT
         # time, and advancing it past data never seen would re-create the
         # reference's mark-done-early bug for the out-of-window tail.
+        # obs.get is read only here: the write that fills it has succeeded.
+        counts = obs.get
         wm = counts["wm"]
         if wm is not None:
             store.commit(
@@ -391,11 +398,9 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
     target = min(total_files, stop_after_files
                  if stop_after_files is not None else total_files)
     if max_wait_sec is None:
-        # the docstore reader is row-at-a-time Python by design budget
-        # (sources/docstore.py) — the drain deadline must scale with the
-        # collection, not sit at a fixed 180 s (observed: the sf10 audit's
-        # 3005-file collection stalled at 1002 files against the old
-        # constant)
+        # the drain deadline must scale with the collection, not sit at a
+        # fixed 180 s (observed: the sf10 audit's 3005-file collection
+        # stalled at 1002 files against the old constant)
         max_wait_sec = max(180.0, 1.0 * total_files)
     deadline = time.time() + max_wait_sec
     try:
@@ -443,11 +448,12 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
 
     Trigger sizing is a first-class knob (round-12 verdict #5):
     ``trigger_files`` (arg) > ``SPARK_GRAFT_TRIGGER_FILES`` (env) >
-    default ~total/3 (≈3 micro-batches).  The r12-measured trade-off —
-    per-trigger machinery is ~1.5 s regardless of batch size, so tiny
-    triggers are machinery-bound (13k-row triggers ≈9 rows/ms) while big
-    ones amortize it (cap=151 drained 1M rows in 24.6 s) — lives in
-    BASELINE.md; pick the cap for latency (small) vs throughput (large).
+    default ~total/3 (≈3 micro-batches).  Each trigger pays a fixed
+    machinery cost — ``streaming.trigger_p50_s`` = 1.6 s for this op's
+    ~3.3k-row triggers at sf0.01 on 4 cores — so tiny triggers are
+    machinery-bound while big ones amortize it (r12, BASELINE.md: cap=151
+    drained 1M rows in 24.6 s); pick the cap for latency (small) vs
+    throughput (large).
 
     Kill/resume is proven separately in tests/test_streaming_etl.py (stop
     after the first batch, restart from the same checkpoint, identical
@@ -487,8 +493,9 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
     back = spark.read.schema(
         "event_id BIGINT, user_id BIGINT, value DOUBLE, "
         "ts TIMESTAMP, dt STRING").json(os.path.join(lake, "current"))
-    n_sunk = back.count()
-    n_unique = back.select("user_id").distinct().count()
+    n_sunk, n_unique = back.agg(
+        F.count(F.lit(1)), F.count_distinct("user_id"),
+    ).collect()[0]  # driver-bounded: one row of two counts
     # the law: the final watermark is the max VALID in-window event time —
     # i.e. the stream drained exactly the window the batch twin processed
     max_valid_ts = max((r["window_end"] for r in hist), default=None)

@@ -19,10 +19,13 @@ from pyspark.sql import SparkSession
 
 from build_pipeline_with_apache_beam_spark.catalog import MAX_PARTITION_BYTES
 
-# Shuffle partitions: on local[N] match core count (each partition is a task;
-# 200 tiny tasks on 32 cores is pure overhead).  On a 1000-executor cluster
-# this would be sized ~2-3x total cores instead; AQE coalesces down from it.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+
+def local_cpus() -> int:
+    """Cores the engine runs on: ``$SPARK_GRAFT_CPUS``, else the host's cpu
+    count.  Also read by code that cannot see the SparkContext — a Python
+    DataSource's ``partitions()`` runs in a planner process the JVM spawns,
+    which inherits this environment."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
 
 
 def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
@@ -33,7 +36,11 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
     Arrow on (vectorized pandas-UDF transfer), UTC session timezone (the
     reference mixes naive datetimes; the engine pins event time to UTC).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS)
+    # Shuffle partitions: on local[N] match core count (each partition is a
+    # task; 200 tiny tasks on 32 cores is pure overhead).  On a 1000-executor
+    # cluster this would be sized ~2-3x total cores instead; AQE coalesces
+    # down from it.
+    cpus = local_cpus()
     builder = (
         SparkSession.builder
         # local[N, 2]: allow one task retry, like a real cluster (default

@@ -15,8 +15,10 @@ the Python half of DSv2):
   filters prune whole files via the manifest (a metadata operation — no
   data touched), and surviving row-level filters are re-applied inside each
   partition read;
-- each surviving file becomes one ``InputPartition``, so the scan is
-  executor-parallel — nothing flows through the driver.
+- the surviving files are packed into about one ``InputPartition`` per
+  core (``catalog.pack_files``, Spark's own file-scan packing), so the
+  scan is executor-parallel — nothing flows through the driver — without
+  paying a Python-worker task per small file.
 
 Reads are Arrow-batched (round-12): ``read()`` yields ``pyarrow.RecordBatch``
 per file — the JSONL parse runs in Arrow's C++ reader and the pushed filters
@@ -52,7 +54,7 @@ from pyspark.sql.datasource import (
 )
 
 from build_pipeline_with_apache_beam_spark import sqltext
-from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.catalog import load_table, pack_files
 from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
 
 SCHEMA_DDL = ("event_id BIGINT, ts_micros BIGINT, user_id BIGINT, "
@@ -99,8 +101,10 @@ def _check_auth(path: str, options) -> None:
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+    """One read task: the files ``pack_files`` grouped together."""
+
+    def __init__(self, paths: list[str]):
+        self.paths = paths
 
 
 def _entry_files(m: dict) -> list[str]:
@@ -151,12 +155,12 @@ class DocStoreReader(DataSourceReader):
         with open(os.path.join(self.path, MANIFEST)) as fh:
             manifest = json.load(fh)
         lo, hi = self._ts_bounds()
-        return [
-            _FilePartition(os.path.join(self.path, f))
+        return [_FilePartition(paths) for paths in pack_files([
+            os.path.join(self.path, f)
             for m in manifest
             if m["max_ts"] >= lo and m["min_ts"] <= hi
             for f in _entry_files(m)
-        ]
+        ])]
 
     _PC_OPS = {
         EqualTo: pc.equal,
@@ -180,8 +184,8 @@ class DocStoreReader(DataSourceReader):
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         # Arrow-batch yield (supported by the Python DataSource API): one
         # columnar parse + vectorized filter per file, no per-row Python
-        yield from self._apply_filters(
-            _load_file_arrow(partition.path)).to_batches()
+        for path in partition.paths:
+            yield from self._apply_filters(_load_file_arrow(path)).to_batches()
 
 
 class DocStoreStreamReader(DataSourceStreamReader):
@@ -234,8 +238,9 @@ class DocStoreStreamReader(DataSourceStreamReader):
         # be correct without the caller's seed
         self._end = max(self._end, start["file_idx"])
         entries = self._manifest()[start["file_idx"]:end["file_idx"]]
-        return [_FilePartition(os.path.join(self.path, f))
-                for m in entries for f in _entry_files(m)]
+        return [_FilePartition(paths) for paths in pack_files(
+            [os.path.join(self.path, f)
+             for m in entries for f in _entry_files(m)])]
 
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         # fault-injection surface (tests/chaos runs): a `<file>.fail_once`
@@ -246,15 +251,16 @@ class DocStoreStreamReader(DataSourceStreamReader):
         # /root/reference/retrieval.py:145-147, without a hand-rolled loop)
         from pyspark import TaskContext
 
-        table = _load_file_arrow(partition.path)
-        if (os.path.exists(partition.path + ".fail_once")
-                and TaskContext.get().attemptNumber() == 0):
-            # emit a partial batch FIRST, then die — the retry must prove
-            # the already-emitted rows are not double-committed
-            yield from table.slice(0, min(3, table.num_rows)).to_batches()
-            raise RuntimeError(
-                "injected transient read failure (fail_once marker)")
-        yield from table.to_batches()
+        for path in partition.paths:
+            table = _load_file_arrow(path)
+            if (os.path.exists(path + ".fail_once")
+                    and TaskContext.get().attemptNumber() == 0):
+                # emit a partial batch FIRST, then die — the retry must
+                # prove the already-emitted rows are not double-committed
+                yield from table.slice(0, min(3, table.num_rows)).to_batches()
+                raise RuntimeError(
+                    "injected transient read failure (fail_once marker)")
+            yield from table.to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable in the streaming checkpoint
@@ -439,7 +445,7 @@ def count_documents(spark: SparkSession, root: str, lo_micros: int,
                                   pa.scalar(hi_micros)))
                 yield pd.DataFrame({"n": [t.filter(mask).num_rows]})
 
-    row = (paths_df.repartition(len(boundary))
+    row = (paths_df.repartition(len(pack_files(boundary)))
            .mapInPandas(_count, "n BIGINT")
            .agg(F.sum("n").alias("n"))
            .collect()[0])  # driver-bounded: ONE scalar (this is a count)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     EqualTo,
@@ -46,8 +47,14 @@ def test_manifest_prunes_files_from_pushed_ts_range(spark, sf_dir):
         LessThanOrEqual(("ts_micros",), hi),
     ]))
     assert rejected == []  # both comparisons accepted
-    parts = r.partitions()
-    assert 0 < len(parts) <= 4, f"pruning failed: {len(parts)}/{n_files} files"
+    with open(os.path.join(root, MANIFEST)) as fh:
+        want = {os.path.join(root, m["file"]) for m in json.load(fh)
+                if m["max_ts"] >= lo and m["min_ts"] <= hi}
+    assert 0 < len(want) < n_files
+    read = [p for part in r.partitions() for p in part.paths]
+    # exactly the overlapping day files, each read once: packing files into
+    # fewer partitions must neither drop a survivor nor let a pruned one in
+    assert sorted(read) == sorted(want)
 
 
 def test_unsupported_filters_are_returned_to_spark(spark, sf_dir):
@@ -516,3 +523,77 @@ def test_append_batch_reclaims_stale_claim_from_dead_producer(
         fh.write(f"some-other-host:{dead_pid}")
     with _pytest.raises(ValueError, match="must be unique"):
         append_batch(spark, root, batch, name="bremote")
+
+
+def _write_jsonl(path: str, n_rows: int, ts0: int) -> None:
+    line = json.dumps({"event_id": 1, "ts_micros": ts0, "user_id": 1,
+                       "event_type": "click", "value": 1.5}) + "\n"
+    with open(path, "w") as fh:
+        fh.write(line * n_rows)
+
+
+@pytest.mark.parametrize("cpus", [1, 2, 4, 8])
+def test_partitions_pack_files_by_bytes(tmp_path, monkeypatch, cpus):
+    """Files are packed into about one partition per core the way Spark
+    packs a file scan (each file costs its bytes plus a 4 MB open cost;
+    split size = min(128 MB, max(open cost, total cost / cores))), not
+    one partition per file.  Covers both readers, a pruned batch scan and
+    stream ranges that span a multi-part ``files`` entry."""
+    from build_pipeline_with_apache_beam_spark.catalog import (
+        MAX_PARTITION_BYTES,
+        OPEN_COST_BYTES,
+    )
+    from build_pipeline_with_apache_beam_spark.sources.docstore import (
+        DocStoreStreamReader,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+    root = str(tmp_path)
+    # mixed sizes: one ~19 MB file, two of 2-3 MB, a three-part entry and
+    # many tiny day files
+    rows = [200_000, 30_000, 25_000] + [1 + 3 * i for i in range(12)]
+    manifest = []
+    for i, n in enumerate(rows):
+        lo = i * 1_000_000
+        if i == 3:
+            names = [f"mp-p{k:04d}.jsonl" for k in range(3)]
+            for k, name in enumerate(names):
+                _write_jsonl(os.path.join(root, name), n + k, lo)
+            manifest.append({"files": names, "min_ts": lo, "max_ts": lo,
+                             "n": 3 * n + 3})
+        else:
+            _write_jsonl(os.path.join(root, f"d{i:02d}.jsonl"), n, lo)
+            manifest.append({"file": f"d{i:02d}.jsonl", "min_ts": lo,
+                             "max_ts": lo, "n": n})
+    with open(os.path.join(root, MANIFEST), "w") as fh:
+        json.dump(manifest, fh)
+
+    def paths(entries):
+        return [os.path.join(root, f) for m in entries
+                for f in (m["files"] if "files" in m else [m["file"]])]
+
+    def check(parts, want):
+        got = [p for part in parts for p in part.paths]
+        assert sorted(got) == sorted(want)  # each file in exactly one part
+        assert 0 < len(parts) <= cpus
+        total = sum(os.path.getsize(p) + OPEN_COST_BYTES for p in want)
+        max_split = min(MAX_PARTITION_BYTES,
+                        max(OPEN_COST_BYTES, total // cpus))
+        for part in parts:
+            if len(part.paths) > 1:
+                assert sum(map(os.path.getsize, part.paths)) <= max_split
+        return max_split
+
+    # batch reader: every file, then only the files the ts range keeps
+    max_split = check(DocStoreReader({"path": root}).partitions(),
+                      paths(manifest))
+    if cpus == 8:  # the big file is over the split size: alone it goes
+        assert os.path.getsize(paths(manifest)[0]) > max_split
+    r = DocStoreReader({"path": root})
+    list(r.pushFilters([GreaterThanOrEqual(("ts_micros",), 2_000_000)]))
+    check(r.partitions(), paths(manifest[2:]))
+    # stream reader: offsets stay manifest-entry indices
+    sr = DocStoreStreamReader({"path": root})
+    for lo, hi in [(0, len(manifest)), (2, 6), (3, 4), (5, 9)]:
+        check(sr.partitions({"file_idx": lo}, {"file_idx": hi}),
+              paths(manifest[lo:hi]))

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from datetime import datetime
+from datetime import datetime, timezone
 
 import pytest
 
@@ -166,6 +166,63 @@ def test_stream_commit_order_is_sink_then_watermark(spark, sf_dir):
     counts = [r["record_count"] for r in hist]
     assert counts == sorted(counts)
     assert counts[-1] == final_n
+
+
+def test_stream_reads_each_batch_from_the_source_once(spark, sf_dir):
+    """Each micro-batch is read from the docstore once (Structured
+    Streaming's per-trigger contract): the funnel counts ride the lake
+    write as observed metrics instead of a second aggregate job over the
+    source, so the query's input rows sum to the collection size, not
+    twice it.  The out-of-window last batch still commits nothing."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    root = build_collection(spark, sf_dir)
+    with open(os.path.join(root, MANIFEST)) as fh:
+        manifest = json.load(fh)
+    total = len(manifest)
+    cap = max(1, -(-total // 3))
+    last_batch = (total - 1) // cap
+    # precondition: every file of the last batch lies after the window
+    window_hi = int(datetime.fromisoformat("2024-01-14 23:59:59.999999")
+                    .replace(tzinfo=timezone.utc).timestamp() * 1_000_000)
+    assert all(m["min_ts"] > window_hi for m in manifest[last_batch * cap:])
+
+    rows: dict = {}
+    ended = threading.Event()
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            rows.setdefault(str(p.id), []).append(
+                (p.batchId, p.numInputRows))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.set()
+
+    lake, wm, ckpt = _dirs("readonce")
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        assert run_etl_stream(spark, sf_dir, lake, wm, ckpt,
+                              tail_cap=cap) >= total
+        assert ended.wait(60), "no termination event for the query"
+    finally:
+        spark.streams.removeListener(listener)
+
+    assert len(rows) == 1, rows
+    progress = next(iter(rows.values()))
+    assert {b for b, n in progress if n} == set(range(last_batch + 1))
+    assert sum(n for _, n in progress) == sum(m["n"] for m in manifest)
+    committed = {r["batch_id"] for r in WatermarkStore(wm).history()}
+    assert committed and last_batch not in committed
 
 
 def test_runlog_funnel_null_batch_ids_kept_individually():
